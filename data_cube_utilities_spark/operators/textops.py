@@ -28,10 +28,10 @@ Design notes per operator:
                    pandas UDF, its oracle twin a generated literal SQL
                    chain with identical evaluation order.
 
-Cache lifecycle: operators that persist a signature/token table either
-release it before returning (localCheckpoint the small result, unpersist
-the cache — the kNN pattern) or, with release_cache=False, hand the lazy
-plan plus cache ownership to the caller.
+Cache lifecycle: operators that persist a signature/token table release
+it before returning (localCheckpoint the small result, unpersist the
+cache — the kNN pattern); nothing stays persisted behind the caller's
+back.
 """
 
 from __future__ import annotations
@@ -195,8 +195,7 @@ def minhash_signatures(df: DataFrame, n_bands: int,
 
 def minhash_lsh_pairs(df: DataFrame, n_bands: int = 8,
                       id_col: str = "doc_id",
-                      text_col: str = "text",
-                      release_cache: bool = True) -> DataFrame:
+                      text_col: str = "text") -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing >=1 band signature.
     Output (doc_a, doc_b, n_bands_shared), doc_a < doc_b.
 
@@ -206,16 +205,13 @@ def minhash_lsh_pairs(df: DataFrame, n_bands: int = 8,
     Signatures are n_docs x n_bands rows — tiny next to the shingle
     explosion, the thing you'd materialize at 100 TB anyway.
 
-    release_cache=True (default) localCheckpoints the SMALL signature
-    table (released with the returned plan, nothing persisted behind the
-    caller's back) and hands back the pair join lazily.  The r5 shape
-    checkpointed the RESULT instead — the pair table is the BIG side
-    (8.2M rows at sf1.0), so every call paid an extra write+read of the
-    output.  False persists the signatures and hands cache ownership to
-    the caller (unchanged)."""
-    sig = minhash_signatures(df, n_bands, id_col, text_col)
-    sig = sig.localCheckpoint(eager=True) if release_cache \
-        else sig.persist()
+    The SMALL signature table is localCheckpointed (released with the
+    returned plan, nothing persisted behind the caller's back) and the
+    pair join is handed back lazily.  The r5 shape checkpointed the
+    RESULT instead — the pair table is the BIG side (8.2M rows at
+    sf1.0), so every call paid an extra write+read of the output."""
+    sig = minhash_signatures(df, n_bands, id_col, text_col) \
+        .localCheckpoint(eager=True)
     a = sig.select(F.col(id_col).alias("doc_a"), "band", "sig")
     b = sig.select(F.col(id_col).alias("doc_b"), "band", "sig")
     return (a.join(b, ["band", "sig"])
@@ -227,8 +223,7 @@ def minhash_lsh_pairs(df: DataFrame, n_bands: int = 8,
 def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8,
                         id_col: str = "doc_id", text_col: str = "text",
                         block_col: str | None = "lang",
-                        max_df: int | None = None,
-                        release_cache: bool = True) -> DataFrame:
+                        max_df: int | None = None) -> DataFrame:
     """Token-set Jaccard similarity for same-block pairs above threshold.
     Blocking (e.g. by lang/source) bounds the pair fan-out at scale.
 
@@ -270,10 +265,9 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8,
               .withColumn("jaccard",
                           F.round(F.col("inter") / F.col("union_sz"), 6)))
     out = (j.filter(F.col("inter") / F.col("union_sz") >= threshold)
-            .select("doc_a", "doc_b", "inter", "union_sz", "jaccard"))
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        tok.unpersist()
+            .select("doc_a", "doc_b", "inter", "union_sz", "jaccard")
+            .localCheckpoint(eager=True))
+    tok.unpersist()
     return out
 
 
@@ -345,8 +339,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id",
 
 def simhash_near_dup_pairs(df: DataFrame, max_hamming: int = 3,
                            id_col: str = "doc_id",
-                           text_col: str = "text",
-                           release_cache: bool = True) -> DataFrame:
+                           text_col: str = "text") -> DataFrame:
     """SimHash near-duplicate PAIRS: split each 64-bit signature into four
     16-bit bands; by pigeonhole, any pair within hamming distance <= 3
     shares at least one identical band, so a (band, key) equi-join has
@@ -380,17 +373,15 @@ def simhash_near_dup_pairs(df: DataFrame, max_hamming: int = 3,
            + F.bit_count(F.col("la").bitwiseXOR(F.col("lb")))).cast("long")
     out = (cand.withColumn("hamming", ham)
                .filter(F.col("hamming") <= max_hamming)
-               .select("doc_a", "doc_b", "hamming"))
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        sig.unpersist()
+               .select("doc_a", "doc_b", "hamming")
+               .localCheckpoint(eager=True))
+    sig.unpersist()
     return out
 
 
 def hash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
                         hash_col: str = "phash", max_hamming: int = 3,
-                        n_bands: int = 4,
-                        release_cache: bool = True) -> DataFrame:
+                        n_bands: int = 4) -> DataFrame:
     """Near-duplicate PAIRS over any 64-bit hash column — the image-phash
     twin of simhash_near_dup_pairs (the input_hint table carries
     phash:int64 per image; codec.phash64 produces it from pixels). Split
@@ -428,10 +419,9 @@ def hash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long")
     out = (cand.withColumn("hamming", ham)
                .filter(F.col("hamming") <= max_hamming)
-               .select("id_a", "id_b", "hamming"))
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        e.unpersist()
+               .select("id_a", "id_b", "hamming")
+               .localCheckpoint(eager=True))
+    e.unpersist()
     return out
 
 
@@ -570,7 +560,7 @@ def _cosine_chain_col(va, vb, dims: int):
     accumulator, incl. the -0.0 edge), one multiply per term, each norm a
     sqrt of the same chain, and a zero denominator yields NULL (Spark's
     non-ANSI x/0 — the kernel's explicit zero-norm nan).  NULL vectors
-    propagate to NULL cosine through the element_at chain.
+    propagate to NULL cosine through the 0-based getItem chain.
 
     Why: the kernel moves BOTH 8*dims-byte vectors of EVERY row across
     the JVM<->Python Arrow boundary — for pair-fanout consumers
@@ -662,9 +652,15 @@ LSH_SEED = 7
 # vectors near this many rows, i.e. planes >= log2(n_rows / target).
 LSH_TARGET_BUCKET = 4
 # Corpus size above which the codegen cosine chain beats the Arrow kernel
-# for pair-fanout consumers: the chain's flat ~0.7 s Catalyst/codegen cost
-# amortizes once the candidate-pair Arrow payload passes ~1 GB (n ~ 8k at
-# the 8x8 default geometry; measured at sf0.1 vs sf1.0).
+# for pair-fanout consumers.  The chain carries a flat per-run cost, about
+# 0.6 s of it Python-side Column construction (py4j round trips): building
+# the operator took 0.98-1.10 s through the Column API vs 0.33-0.42 s as
+# one F.expr string.  Even string-built, the chain still loses below ~8k
+# rows — embedding_near_dup_pairs on local[4], planes=8, warm: sf0.1 (2k
+# vectors) kernel 1.19-1.20 s vs Column chain 2.10-2.38 s vs string chain
+# 1.48-1.70 s; sf0.01 kernel 0.85-1.22 s vs string chain 1.26-1.34 s.  It
+# pays off once the candidate-pair Arrow payload passes ~1 GB (n ~ 8k at
+# the 8x8 default geometry), so both cosine paths stay.
 CHAIN_MIN_ROWS = 8192
 
 
@@ -804,7 +800,6 @@ def _banded_signatures(e: DataFrame, dims: int, bands: int = N_BANDS_LSH,
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
                              dims: int = 64, id_col: str = "vec_id",
                              vec_col: str = "embedding",
-                             release_cache: bool = True,
                              bands: int = N_BANDS_LSH,
                              planes: int | None = None,
                              n_rows: int | None = None) -> DataFrame:
@@ -818,11 +813,9 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
     only — vectors re-join by id afterwards, so the wide payload never
     rides through the pair explosion.
 
-    release_cache=True (default) localCheckpoints the SMALL signature
-    table (released with the returned plan object — no persisted table
-    left behind; VERDICT r3 What's-wrong #2) and returns the pair join
-    lazily.  Pass False to persist the signatures instead (cache
-    ownership moves to the caller for the plan's lifetime).
+    The SMALL signature table is localCheckpointed (released with the
+    returned plan object — no persisted table left behind; VERDICT r3
+    What's-wrong #2) and the pair join is returned lazily.
 
     planes=None auto-sizes the band width from the corpus row count
     (auto_planes; n_rows skips the count when the caller knows it).
@@ -832,10 +825,9 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
     8*dims-byte vectors of every pair through the Arrow kernel is the
     dominant cost (sf1.0: 7.3M pairs = ~7.5 GB framed; the codegen chain
     cut the query 12.5 s -> 5.4 s).  The chain itself costs a flat
-    ~0.7 s of Catalyst/codegen work per run, so a small corpus (sf0.1:
-    2k rows, 60k pairs) is FASTER on the kernel (1.6 s vs 2.4 s
-    measured).  One cheap count() decides when the caller did not pass
-    n_rows."""
+    per-run overhead (see CHAIN_MIN_ROWS), so a small corpus (sf0.1:
+    2k rows, 60k pairs) is FASTER on the kernel.  One cheap count()
+    decides when the caller did not pass n_rows."""
     e = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
     n = n_rows if n_rows is not None else e.count()
@@ -844,13 +836,11 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
     # Repartition on the composite join key, then materialize: (band,
     # key) IS the partition key of the scale design, and the materialized
     # table stops the signature pass running once per self-join side (no
-    # ReusedExchange when one side broadcasts).  release_cache=True
-    # localCheckpoints the SMALL signature table and returns the pair
-    # plan LAZILY — the r5 shape checkpointed the (much larger) result.
+    # ReusedExchange when one side broadcasts).  The SMALL signature
+    # table is localCheckpointed and the pair plan returned LAZILY — the
+    # r5 shape checkpointed the (much larger) result.
     sig = _banded_signatures(e, dims, bands, planes).drop("v") \
-        .repartition("band", "key")
-    sig = sig.localCheckpoint(eager=True) if release_cache \
-        else sig.persist()
+        .repartition("band", "key").localCheckpoint(eager=True)
     a = sig.select(F.col("vec_id").alias("vec_a"), "band", "key")
     b = sig.select(F.col("vec_id").alias("vec_b"), "band", "key")
     cand = (a.join(b, ["band", "key"])
@@ -971,7 +961,6 @@ def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
                        dims: int, k: int = 5, probe_bits: int = 0,
                        id_col: str = "vec_id",
                        vec_col: str = "embedding",
-                       release_cache: bool = True,
                        bands: int = N_BANDS_LSH,
                        planes: int | None = None,
                        n_rows: int | None = None) -> DataFrame:
@@ -989,8 +978,8 @@ def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
     recall — still an equi-join, never all-pairs.
     Output: (query_id, vec_id, cosine, rank<=k).
 
-    release_cache=True materializes the k x |queries| result and
-    unpersists the signature cache before returning (kNN lifecycle).
+    The k x |queries| result is materialized and the signature cache
+    unpersisted before returning (kNN lifecycle).
     planes=None auto-sizes the band width from the corpus row count."""
     e = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
@@ -1022,10 +1011,9 @@ def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
     out = (j.withColumn("cosine", F.round(cos, 6))
             .select("query_id", "vec_id", "cosine")
             .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        sig.unpersist()
+            .filter(F.col("rank") <= k)
+            .localCheckpoint(eager=True))
+    sig.unpersist()
     return out
 
 
@@ -1033,18 +1021,15 @@ def lsh_ann_topk(emb: DataFrame, query_id: int, dims: int, k: int = 5,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  bands: int = N_BANDS_LSH,
                  planes: int | None = None,
-                 n_rows: int | None = None,
-                 release_cache: bool = True) -> DataFrame:
+                 n_rows: int | None = None) -> DataFrame:
     """ANN: restrict the exact cosine scan to vectors sharing >=1 banded
     sign-LSH key with the query — the scale path ((band, key) equi-join
     instead of full cross join; candidates bounded by band-bucket mass).
     Output: (vec_id, n_bands_shared, cosine, rank).
 
     planes=None auto-sizes the band width from the corpus row count.
-    release_cache=True (default) materializes the k-row result and
-    unpersists the signature cache before returning; False hands the lazy
-    plan plus cache ownership to the caller — same contract as every
-    sibling operator (ADVICE r4)."""
+    The k-row result is materialized and the signature cache unpersisted
+    before returning — same lifecycle as every sibling operator."""
     e = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
     planes = _resolve_planes(e, planes, n_rows)
@@ -1060,10 +1045,9 @@ def lsh_ann_topk(emb: DataFrame, query_id: int, dims: int, k: int = 5,
     j = cand.join(e, "vec_id").crossJoin(F.broadcast(qv))
     cos = _cosine_col(F.col("v"), F.col("qv"))
     out = _ranked_topk(j.withColumn("cosine", F.round(cos, 6)),
-                       k, "vec_id", "n_bands_shared", "cosine")
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        sig.unpersist()
+                       k, "vec_id", "n_bands_shared", "cosine") \
+        .localCheckpoint(eager=True)
+    sig.unpersist()
     return out
 
 
@@ -1663,8 +1647,7 @@ def deterministic_sample(df: DataFrame, fraction: float = None,
 
 def pack_chunks(df: DataFrame, window: int = 512, n_shards: int = 32,
                 id_col: str = "doc_id", text_col: str = "text",
-                n_tokens=None, salt: str = "v1",
-                release_cache: bool = True) -> DataFrame:
+                n_tokens=None, salt: str = "v1") -> DataFrame:
     """Sequence packing (concat-and-chunk): lay every document's tokens
     end-to-end in a deterministic global order and split the stream into
     fixed `window`-token training chunks — the manifest a training-data
@@ -1722,10 +1705,8 @@ def pack_chunks(df: DataFrame, window: int = 512, n_shards: int = 32,
         F.col("chunk_id").cast("long").alias("chunk_id"), "doc_id",
         (s - F.col("chunk_id") * W).cast("long").alias("pos_in_chunk"),
         (s - F.col("off")).cast("long").alias("tok_begin"),
-        (e - s).cast("long").alias("n_tok"))
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        d.unpersist()
+        (e - s).cast("long").alias("n_tok")).localCheckpoint(eager=True)
+    d.unpersist()
     return out
 
 
@@ -1766,8 +1747,7 @@ def redact_pii(df: DataFrame, text_col: str = "text",
 
 
 def char_bigram_familiarity(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text",
-                            release_cache: bool = True) -> DataFrame:
+                            text_col: str = "text") -> DataFrame:
     """Perplexity-proxy quality scoring (the CCNet-style LM gate, made
     exact-integer): score each document by how familiar its character
     bigrams are to the corpus — garbled/boilerplate/wrong-charset text
@@ -1782,8 +1762,7 @@ def char_bigram_familiarity(df: DataFrame, id_col: str = "doc_id",
 
     The bigram explode is the dominant stage and feeds BOTH branches
     (model fit + scoring join), so it is persisted once and released
-    after the result materializes (release_cache=False hands back the
-    lazy plan for inspection, the minhash contract)."""
+    after the result materializes."""
     grams = (_fanout(df).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.expr(
@@ -1802,10 +1781,9 @@ def char_bigram_familiarity(df: DataFrame, id_col: str = "doc_id",
                       F.coalesce("familiarity_total", F.lit(0))
                        .alias("familiarity_total"),
                       F.coalesce("n_bigrams", F.lit(0))
-                       .alias("n_bigrams")))
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        grams.unpersist()
+                       .alias("n_bigrams"))
+              .localCheckpoint(eager=True))
+    grams.unpersist()
     return out
 
 
@@ -2405,8 +2383,7 @@ def normalize_text(df: DataFrame, id_col: str = "doc_id",
 def containment_dedup_pairs(df: DataFrame, min_contain_q20: int,
                             max_df: int = 1000,
                             id_col: str = "doc_id",
-                            text_col: str = "text",
-                            release_cache: bool = True) -> DataFrame:
+                            text_col: str = "text") -> DataFrame:
     """ASYMMETRIC near-dup detection by exact trigram CONTAINMENT
     (Broder's resemblance twin): contain(A in B) = |A ∩ B| * 2^20 DIV
     |A| over distinct word-trigram sets.  Jaccard misses the classic
@@ -2448,10 +2425,9 @@ def containment_dedup_pairs(df: DataFrame, min_contain_q20: int,
                 .filter((F.col("contain_a_q20") >= min_contain_q20)
                         | (F.col("contain_b_q20") >= min_contain_q20))
                 .select("doc_a", "doc_b", "inter", "n_a", "n_b",
-                        "contain_a_q20", "contain_b_q20"))
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        sh.unpersist()
+                        "contain_a_q20", "contain_b_q20")
+                .localCheckpoint(eager=True))
+    sh.unpersist()
     return out
 
 

@@ -36,15 +36,6 @@ def assign_cells(df: DataFrame, lat_col: str, lon_col: str, res: int,
                          cells.encode_col(F.col(lat_col), F.col(lon_col), res))
 
 
-def geographic_chunks(lat_range: tuple[float, float],
-                      lon_range: tuple[float, float],
-                      res: int) -> np.ndarray:
-    """The chunk list for a bbox = geocell cover (replaces the reference's
-    degree-sized chunk tuples; dc_chunker.py:8-85)."""
-    return cells.polyfill_bbox(lat_range[0], lat_range[1],
-                               lon_range[0], lon_range[1], res)
-
-
 def geographic_chunks_degrees(longitude: tuple[float, float],
                               latitude: tuple[float, float],
                               geographic_chunk_size: float = 0.5) -> list[dict]:

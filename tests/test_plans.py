@@ -115,26 +115,21 @@ def test_band_indices_is_double_not_decimal(spark):
 
 
 def test_lsh_pair_joins_read_cached_signatures(spark):
-    """The pair operators' self-joins must consume the persisted signature
-    table on BOTH sides — without it each side re-runs the full signature
-    pipeline (no ReusedExchange when one side broadcasts), doubling the
-    dominant cost (r3: minhash bench wall 3.45s -> 0.71s)."""
+    """The pair operators' self-joins must consume the materialized
+    signature table on BOTH sides — without it each side re-runs the full
+    signature pipeline (no ReusedExchange when one side broadcasts),
+    doubling the dominant cost (r3: minhash bench wall 3.45s -> 0.71s).
+    Both operators localCheckpoint the signatures and return the pair
+    join lazily, so each join side is a scan of the checkpointed RDD."""
     from data_cube_utilities_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(50)
-    # release_cache=False hands back the lazy plan (default checkpoints
-    # the result and releases the cache, hiding the join structure)
-    plan = plan_of(textops.minhash_lsh_pairs(docs, release_cache=False))
-    # (the cached relation's stored description still mentions md5, so the
-    # scan count — not expression text — is the reuse signal)
-    assert plan.count("InMemoryTableScan") >= 2
+    plan = plan_of(textops.minhash_lsh_pairs(docs))
+    assert plan.count("Scan ExistingRDD") == 2
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(50)
-    eplan = plan_of(textops.embedding_near_dup_pairs(
-        emb, dims=64, release_cache=False))
-    assert eplan.count("InMemoryTableScan") >= 2
-    # release_cache=False hands cache ownership to the caller — this test
-    spark.catalog.clearCache()
+    eplan = plan_of(textops.embedding_near_dup_pairs(emb, dims=64))
+    assert eplan.count("Scan ExistingRDD") == 2
 
 
 def test_text_fanout_runs_at_full_parallelism(spark, tmp_path):
@@ -223,11 +218,18 @@ def test_group_b_operators_release_their_caches(spark):
     leave no cached signature/token table behind by default — a long-lived
     service calling them per-batch otherwise accumulates executors-full of
     cache. At most the localCheckpoint of the small RESULT may remain
-    (released with the result object — the kNN lifecycle)."""
+    (released with the result object — the kNN lifecycle), and no
+    Dataset stays registered with the cache manager."""
     from data_cube_utilities_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(60)
+    imgs = docs.select(F.col("doc_id").alias("img_id"),
+                       F.xxhash64("text").alias("phash"))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    # start from an empty cache so a leak from another test cannot fail
+    # (or mask) this one
+    spark.catalog.clearCache()
     calls = [
         lambda: textops.minhash_lsh_pairs(docs),
         lambda: textops.ngram_jaccard_pairs(docs, max_df=200),
@@ -236,6 +238,10 @@ def test_group_b_operators_release_their_caches(spark):
                                                  threshold=0.3),
         lambda: textops.lsh_ann_topk_batch(emb, [0, 7], dims=64, k=3),
         lambda: textops.lsh_ann_topk(emb, query_id=0, dims=64, k=3),
+        lambda: textops.hash_near_dup_pairs(imgs, id_col="img_id"),
+        lambda: textops.pack_chunks(docs, window=64, n_shards=8),
+        lambda: textops.char_bigram_familiarity(docs),
+        lambda: textops.containment_dedup_pairs(docs, 900000),
     ]
     for call in calls:
         before = _cached_ids(spark)
@@ -245,6 +251,7 @@ def test_group_b_operators_release_their_caches(spark):
         leaked = {k: v for k, v in new.items()
                   if "localCheckpoint" not in v}
         assert not leaked, f"leaked caches: {leaked}"
+        assert cache.isEmpty()
 
 
 def test_contamination_probe_side_broadcasts(spark):
@@ -259,13 +266,14 @@ def test_contamination_probe_side_broadcasts(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_familiarity_model_broadcasts(spark):
+def test_familiarity_model_broadcasts(spark, checkpoint_plan):
     from data_cube_utilities_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(textops.char_bigram_familiarity(docs, release_cache=False))
-    assert "BroadcastExchange" in plan       # the bigram count table
-    assert "InMemoryTableScan" in plan       # the persisted bigram fan-out
+    _, tree, _ = checkpoint_plan(
+        lambda: textops.char_bigram_familiarity(docs))
+    assert "BroadcastExchange" in tree       # the bigram count table
+    assert "InMemoryTableScan" in tree       # the persisted bigram fan-out
 
 
 def test_deterministic_sample_is_shuffle_free(spark):
@@ -277,18 +285,18 @@ def test_deterministic_sample_is_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
-def test_pack_chunks_single_scan_and_broadcast_base(spark):
+def test_pack_chunks_single_scan_and_broadcast_base(spark, checkpoint_plan):
     from data_cube_utilities_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(textops.pack_chunks(docs, window=64, n_shards=8,
-                                       release_cache=False))
+    _, tree, plan = checkpoint_plan(
+        lambda: textops.pack_chunks(docs, window=64, n_shards=8))
     # both prefix-sum branches read the persisted (doc_id, n, shard)
     # projection -> the corpus parquet is scanned once at cache fill
-    assert plan.count("InMemoryTableScan") == 2
+    assert tree.count("InMemoryTableScan") == 2
     # shard bases (n_shards rows) broadcast back; the only corpus-wide
     # exchange is the hashpartitioning on shard for the window
-    assert "BroadcastExchange" in plan
+    assert "BroadcastExchange" in tree
     assert "hashpartitioning(shard" in plan
 
 

@@ -43,13 +43,16 @@ def test_rolling_baseline_matches_pandas(sdf):
 
 
 def test_ffill_bfill(sdf):
-    out = temporal.ffill(sdf, ["key"], "vn", "ts", tiebreak=["obs"]).toPandas()
     pdf = series_pdf().sort_values(["key", "ts", "obs"])
-    exp = pdf.groupby("key")["vn"].ffill().reset_index(drop=True)
-    got = (out.sort_values(["key", "ts", "obs"])
-              .vn_filled.reset_index(drop=True))
-    pd.testing.assert_series_equal(got.rename(None), exp.rename(None),
-                                   check_names=False)
+    for fill, col in [(temporal.ffill, "vn_filled"),
+                      (temporal.bfill, "vn_bfilled")]:
+        out = fill(sdf, ["key"], "vn", "ts", tiebreak=["obs"]).toPandas()
+        exp = (getattr(pdf.groupby("key")["vn"], fill.__name__)()
+               .reset_index(drop=True))
+        got = (out.sort_values(["key", "ts", "obs"])[col]
+                  .reset_index(drop=True))
+        pd.testing.assert_series_equal(got.rename(None), exp.rename(None),
+                                       check_names=False)
 
 
 def test_gap_stats(sdf):
