@@ -33,21 +33,16 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 def _fit_sample(df: DataFrame, cols: Sequence[str], sample_rows: int,
-                seed: int, n_rows: int | None = None) -> pd.DataFrame:
+                seed: int) -> pd.DataFrame:
     """Bounded deterministic fit-stage sample in ONE job (VERDICT r2 #7).
 
-    With ``n_rows`` (caller already knows the table size) the exact-fraction
-    Bernoulli sample is used. Without it, the old path ran a full count()
-    job first; instead each partition now contributes its first
-    ceil(sample_rows / n_partitions) rows via a single mapInPandas pass —
-    every partition is represented (no first-partitions limit() bias), no
-    shuffle, no count job — and the driver thins any surplus with a seeded
+    Each partition contributes its first ceil(sample_rows / n_partitions)
+    rows via a single mapInPandas pass — every partition is represented
+    (no first-partitions limit() bias), no shuffle, no count() job to pick
+    a Bernoulli fraction — and the driver thins any surplus with a seeded
     rng. Partition-head order is parquet scan order, which is arbitrary
     with respect to values; fine for fit-stage initialization."""
     sel = df.select(*cols)
-    if n_rows is not None:
-        frac = min(1.0, sample_rows / max(n_rows, 1))
-        return sel.sample(frac, seed=seed).limit(sample_rows).toPandas()
     n_parts = max(1, sel.rdd.getNumPartitions())
     cap = -(-sample_rows // n_parts)   # ceil
 
@@ -70,11 +65,11 @@ def _fit_sample(df: DataFrame, cols: Sequence[str], sample_rows: int,
 
 def kmeans_fit(df: DataFrame, feature_cols: Sequence[str], k: int,
                sample_rows: int = 100_000, max_iter: int = 50,
-               seed: int = 42, n_rows: int | None = None) -> np.ndarray:
+               seed: int = 42) -> np.ndarray:
     """Fit k centroids with Lloyd's algorithm on a deterministic sample
     (k-means++-style farthest-point seeding). Returns (k, d) centers."""
-    sample = _fit_sample(df, feature_cols, sample_rows, seed,
-                         n_rows).to_numpy(dtype=np.float64)
+    sample = _fit_sample(df, feature_cols, sample_rows,
+                         seed).to_numpy(dtype=np.float64)
     sample = sample[~np.isnan(sample).any(axis=1)]
     return _lloyd_np(sample, k, max_iter=max_iter, seed=seed)
 
@@ -184,14 +179,13 @@ def kmeans_cluster(df: DataFrame, feature_cols: Sequence[str], k: int,
 
 def kmeans_tree_fit(df: DataFrame, feature_cols: Sequence[str],
                     n_levels: int = 2, n_clusters: int = 3,
-                    sample_rows: int = 100_000, seed: int = 42,
-                    n_rows: int | None = None):
+                    sample_rows: int = 100_000, seed: int = 42):
     """Hierarchical k-means (dea classification.py:797-908 KMeans_tree):
     fit k clusters, then recursively fit k children on each partition of
     the sample. Returns a nested dict {centers, children} mirroring the
     reference's branches; labels compose as base * k^(levels-1) + child."""
-    X = _fit_sample(df, feature_cols, sample_rows, seed,
-                    n_rows).to_numpy(dtype=np.float64)
+    X = _fit_sample(df, feature_cols, sample_rows,
+                    seed).to_numpy(dtype=np.float64)
     X = X[~np.isnan(X).any(axis=1)]
 
     def fit_node(Xn, levels, node_seed):
@@ -336,15 +330,14 @@ def spatial_kfold(df: DataFrame, n_splits: int, x_col: str = "x",
 
 def svm_fit(df: DataFrame, feature_cols: Sequence[str], label_col: str,
             reg: float = 1e-3, epochs: int = 20,
-            sample_rows: int = 100_000, seed: int = 42,
-            n_rows: int | None = None):
+            sample_rows: int = 100_000, seed: int = 42):
     """Linear SVM via Pegasos SGD on a deterministic sample — the trainer
     behind a wasard-style classifier (wasard.py:19-210 trains an sklearn
     SVC on SAR bands against WOfS water labels; linear kernel is its
     documented default configuration). Labels are 0/1; features are
     z-scored internally. Returns (w, b, mean, std)."""
     pdf = _fit_sample(df, list(feature_cols) + [label_col], sample_rows,
-                      seed, n_rows).dropna()
+                      seed).dropna()
     X = pdf[list(feature_cols)].to_numpy(dtype=np.float64)
     y = pdf[label_col].to_numpy(dtype=np.float64) * 2.0 - 1.0   # {0,1}->{-1,1}
     mean, std = X.mean(axis=0), X.std(axis=0)
@@ -380,8 +373,7 @@ def svm_classify_col(feature_cols: Sequence[str], w: np.ndarray, b: float,
 
 def birch_fit(df: DataFrame, feature_cols: Sequence[str], n_clusters: int,
               threshold: float = 0.5, max_subclusters: int = 256,
-              sample_rows: int = 100_000, seed: int = 42,
-              n_rows: int | None = None):
+              sample_rows: int = 100_000, seed: int = 42):
     """BIRCH fit (dc_clustering.py:122-157 wraps sklearn.Birch; this is a
     real CF implementation, not a k-means stand-in):
 
@@ -397,8 +389,8 @@ def birch_fit(df: DataFrame, feature_cols: Sequence[str], n_clusters: int,
     Returns (subcenters (m, d), labels (m,)): a point is assigned to its
     nearest SUBCLUSTER, whose global label it inherits — exactly the
     two-stage Birch.predict contract."""
-    X = _fit_sample(df, feature_cols, sample_rows, seed,
-                    n_rows).to_numpy(dtype=np.float64)
+    X = _fit_sample(df, feature_cols, sample_rows,
+                    seed).to_numpy(dtype=np.float64)
     X = X[~np.isnan(X).any(axis=1)]
 
     def build(thr):

@@ -887,11 +887,20 @@ def _cc_labels_df(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     return lab
 
 
+# Seam-pair count up to which vectorize_regions_global resolves seam
+# components with a driver union-find; above it, _cc_labels_df.  Both arms
+# return identical rows.  On the registry's vectorize_regions input (sf0.01,
+# 473 regions, local[4], 5 warm reps) the driver arm took 1.5-2.5 s (median
+# 1.8 s) and 10 Spark jobs, the distributed arm 3.2-6.1 s (median 3.5 s)
+# and 58 jobs, so the driver arm serves every graph it can hold; the
+# distributed arm is the only one that never collects the seam graph onto
+# the driver.
+_SEAM_DRIVER_MAX_PAIRS = 1_000_000
+
+
 def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
                              tile_w: int = 64, tile_h: int = 64,
-                             dense_ids: bool = False,
-                             seam_merge: str = "auto",
-                             driver_merge_max_pairs: int = 1_000_000) -> DataFrame:
+                             dense_ids: bool = False) -> DataFrame:
     """xr_vectorize with CROSS-TILE region merge (SURVEY.md 2.3 promise;
     dea_tools/dea_tools/spatial.py:51-161 produces whole polygons) —
     VERDICT r1 missing #2.
@@ -913,8 +922,9 @@ def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
         relabel — no unbounded .collect(); at continental 100x the seam
         graph of millions of fine-res tiles never lands on one driver
         core (VERDICT r4 What's-wrong #2).
-    seam_merge='auto' (default) picks driver below
-    driver_merge_max_pairs seam pairs, distributed above.
+    The observed seam-pair count picks the arm: driver up to
+    _SEAM_DRIVER_MAX_PAIRS pairs, distributed above (measured reason in
+    the constant's comment).
     Stage 4: re-aggregate stats with one groupBy — counts/bboxes/
     centroids merge exactly (sums, min/max).
 
@@ -994,14 +1004,7 @@ def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
                  # tiny (seam-crossing regions only) and read 1-2x below
                  .localCheckpoint(eager=True))
 
-    if seam_merge == "auto":
-        strategy = ("driver"
-                    if pairs_df.count() <= driver_merge_max_pairs
-                    else "distributed")
-    else:
-        strategy = seam_merge
-
-    if strategy == "driver":
+    if pairs_df.count() <= _SEAM_DRIVER_MAX_PAIRS:
         pairs = pairs_df.collect()
         # driver union-find over (tile, label) keys crossing a seam;
         # roots = min (tx, ty, region) tuple of each component
@@ -1038,7 +1041,7 @@ def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
                       "sum_x double, sum_y double, "
                       "rtx long, rty long, rreg long")
         relabeled = stats.mapInPandas(relabel, schema=rel_schema)
-    elif strategy == "distributed":
+    else:
         # pack (tx, ty, region) into one int64 ordered LIKE the driver
         # path's tuple comparison (tx major), so the component minimum —
         # and therefore every region_id — is identical on both paths
@@ -1068,9 +1071,6 @@ def vectorize_regions_global(planes: DataFrame, threshold: float = 0.5,
                              F.coalesce("_rty", F.col("ty")).alias("rty"),
                              F.coalesce("_rreg", F.col("region"))
                               .alias("rreg")))
-    else:
-        raise ValueError(f"seam_merge must be auto|driver|distributed, "
-                         f"got {seam_merge!r}")
 
     merged = (relabeled
               .groupBy("rtx", "rty", "rreg")

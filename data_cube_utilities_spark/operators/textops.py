@@ -682,16 +682,11 @@ def auto_planes(n_rows: int,
                math.ceil(math.log2(max(n_rows / target_bucket, 1.0))))
 
 
-def _resolve_planes(e: DataFrame, planes: int | None,
-                    n_rows: int | None) -> int:
-    """planes=None -> auto-size from n_rows (caller-supplied, or one cheap
-    count — parquet metadata at scale). Explicit planes pin the geometry
-    (the driver-oracle queries do this: the generated literal SQL must
-    match bit-for-bit)."""
-    if planes is not None:
-        return planes
-    n = n_rows if n_rows is not None else e.count()
-    return auto_planes(n)
+def _resolve_planes(e: DataFrame, planes: int | None) -> int:
+    """planes=None -> auto-size from one cheap count (parquet metadata at
+    scale). Explicit planes pin the geometry (the driver-oracle queries do
+    this: the generated literal SQL must match bit-for-bit)."""
+    return planes if planes is not None else auto_planes(e.count())
 
 
 def _plane_matrix(dims: int, n_planes: int | None = None) -> "np.ndarray":
@@ -801,8 +796,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
                              dims: int = 64, id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              bands: int = N_BANDS_LSH,
-                             planes: int | None = None,
-                             n_rows: int | None = None) -> DataFrame:
+                             planes: int | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS — the fifth dedup mode of the
     training-data family (exact / MinHash-LSH / Jaccard / SimHash /
     embedding-cosine). Candidates are pairs sharing >=1 of the
@@ -818,7 +812,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
     What's-wrong #2) and the pair join is returned lazily.
 
     planes=None auto-sizes the band width from the corpus row count
-    (auto_planes; n_rows skips the count when the caller knows it).
+    (auto_planes).
 
     Cosine dispatch is SIZE-AWARE: the candidate-pair mass grows
     ~bands * n^2 / 2^planes, and for a large corpus shipping both
@@ -827,10 +821,10 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
     cut the query 12.5 s -> 5.4 s).  The chain itself costs a flat
     per-run overhead (see CHAIN_MIN_ROWS), so a small corpus (sf0.1:
     2k rows, 60k pairs) is FASTER on the kernel.  One cheap count()
-    decides when the caller did not pass n_rows."""
+    decides."""
     e = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
-    n = n_rows if n_rows is not None else e.count()
+    n = e.count()
     planes = planes if planes is not None else auto_planes(n)
     chain_cosine = n >= CHAIN_MIN_ROWS
     # Repartition on the composite join key, then materialize: (band,
@@ -962,8 +956,7 @@ def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
                        id_col: str = "vec_id",
                        vec_col: str = "embedding",
                        bands: int = N_BANDS_LSH,
-                       planes: int | None = None,
-                       n_rows: int | None = None) -> DataFrame:
+                       planes: int | None = None) -> DataFrame:
     """Batch ANN — the shape a training-data pipeline actually runs at
     100 TB: MANY queries at once against the LSH-bucketed corpus. The
     query block (tiny) broadcasts onto the bucket equi-join, so candidates
@@ -983,7 +976,7 @@ def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
     planes=None auto-sizes the band width from the corpus row count."""
     e = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
-    planes = _resolve_planes(e, planes, n_rows)
+    planes = _resolve_planes(e, planes)
     # no repartition("band", "key") here: unlike the near-dup SELF-join,
     # the bucket probe joins sig against a BROADCAST query block, so
     # sig's partitioning is irrelevant — the repartition only added a
@@ -1020,8 +1013,7 @@ def lsh_ann_topk_batch(emb: DataFrame, query_ids: "Sequence[int]",
 def lsh_ann_topk(emb: DataFrame, query_id: int, dims: int, k: int = 5,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  bands: int = N_BANDS_LSH,
-                 planes: int | None = None,
-                 n_rows: int | None = None) -> DataFrame:
+                 planes: int | None = None) -> DataFrame:
     """ANN: restrict the exact cosine scan to vectors sharing >=1 banded
     sign-LSH key with the query — the scale path ((band, key) equi-join
     instead of full cross join; candidates bounded by band-bucket mass).
@@ -1032,7 +1024,7 @@ def lsh_ann_topk(emb: DataFrame, query_id: int, dims: int, k: int = 5,
     before returning — same lifecycle as every sibling operator."""
     e = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
-    planes = _resolve_planes(e, planes, n_rows)
+    planes = _resolve_planes(e, planes)
     sig = _banded_signatures(e, dims, bands, planes).drop("v").persist()
     q = (sig.filter(F.col("vec_id") == query_id)
             .select("band", "key"))
@@ -1081,8 +1073,7 @@ def pq_codebook_train(emb: DataFrame, dims: int, m: int = 8,
                       ksub: int = 256, sample: int = 100_000,
                       seed: int = 42, max_iter: int = 25,
                       id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      n_rows: int | None = None) -> "np.ndarray":
+                      vec_col: str = "embedding") -> "np.ndarray":
     """Trained PQ codebook: an independent k-means (mlops._lloyd_np) per
     subspace over a bounded sample.  The m fits are independent, so they
     run as m PARALLEL grouped-map tasks executor-side (one row per
@@ -1100,9 +1091,7 @@ def pq_codebook_train(emb: DataFrame, dims: int, m: int = 8,
     dsub = dims // m
     s = emb.select(F.col(id_col).alias("vec_id"),
                    F.col(vec_col).cast("array<double>").alias("v"))
-    # n_rows skips the sizing count() — one whole extra table scan at
-    # 100 TB just to pick a sampling fraction (the kmeans_fit contract)
-    n = n_rows if n_rows is not None else s.count()
+    n = s.count()
     if n > sample:
         s = s.sample(fraction=min(1.0, 1.25 * sample / n), seed=seed) \
              .limit(sample)
@@ -1527,8 +1516,7 @@ def semantic_dedup_clusters(emb: DataFrame, threshold: float = 0.9,
                             dims: int = 64, id_col: str = "vec_id",
                             vec_col: str = "embedding",
                             bands: int = N_BANDS_LSH,
-                            planes: int | None = None,
-                            n_rows: int | None = None) -> DataFrame:
+                            planes: int | None = None) -> DataFrame:
     """SemDeDup-style SEMANTIC dedup (Abbas et al. 2023): rows whose
     embeddings are near-duplicates (exact cosine >= threshold over
     banded sign-LSH candidates) collapse into clusters, keeping the
@@ -1540,7 +1528,7 @@ def semantic_dedup_clusters(emb: DataFrame, threshold: float = 0.9,
     cosine threshold, and the CC closure shuffles only that graph."""
     pairs = embedding_near_dup_pairs(
         emb, threshold=threshold, dims=dims, id_col=id_col,
-        vec_col=vec_col, bands=bands, planes=planes, n_rows=n_rows)
+        vec_col=vec_col, bands=bands, planes=planes)
     return cluster_from_pairs(emb, pairs, id_col=id_col,
                               a_col="vec_a", b_col="vec_b")
 

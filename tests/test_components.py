@@ -65,7 +65,7 @@ def _monolithic_regions(mask):
     return sorted(out)
 
 
-def test_vectorize_regions_global_tiled_equals_monolithic(spark):
+def test_vectorize_regions_global_tiled_equals_monolithic(spark, monkeypatch):
     # blobs deliberately spanning tile seams (VERDICT r1 missing #2)
     rng = np.random.RandomState(19)
     mask = np.zeros((96, 96), dtype=bool)
@@ -94,10 +94,11 @@ def test_vectorize_regions_global_tiled_equals_monolithic(spark):
 
     # the distributed seam merge (min-label propagation over the seam-edge
     # DataFrame, VERDICT r4 Next #4) must produce BIT-IDENTICAL rows —
-    # including region_ids (roots are the same min (tx,ty,region) key)
+    # including region_ids (roots are the same min (tx,ty,region) key);
+    # a negative driver bound sends every seam graph to it
+    monkeypatch.setattr(rasterops, "_SEAM_DRIVER_MAX_PAIRS", -1)
     dist = (rasterops.vectorize_regions_global(
-                df, threshold=0.5, tile_w=T, tile_h=T,
-                seam_merge="distributed").toPandas()
+                df, threshold=0.5, tile_w=T, tile_h=T).toPandas()
             .sort_values("region_id").reset_index(drop=True))
     drv = out.sort_values("region_id").reset_index(drop=True)
     assert dist.equals(drv), "driver vs distributed seam merge diverged"

@@ -367,13 +367,6 @@ def test_fit_sample_is_single_job_and_covers_partitions(spark):
     assert pdf.equals(pdf2)
 
 
-def test_fit_sample_known_n_rows_uses_exact_fraction(spark):
-    df = spark.range(0, 10_000, 1, 4).withColumn(
-        "x", (F.col("id") % 31).cast("double"))
-    pdf = mlops._fit_sample(df, ["x"], sample_rows=500, seed=2, n_rows=10_000)
-    assert 0 < len(pdf) <= 500
-
-
 def test_grouped_fit_key_schema_follows_input_types(spark):
     """String (and any non-long) grouping keys must work — the key schema
     is derived from the input, not hardcoded (ADVICE r2)."""

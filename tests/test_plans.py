@@ -219,13 +219,33 @@ def test_group_b_operators_release_their_caches(spark):
     service calling them per-batch otherwise accumulates executors-full of
     cache. At most the localCheckpoint of the small RESULT may remain
     (released with the result object — the kNN lifecycle), and no
-    Dataset stays registered with the cache manager."""
-    from data_cube_utilities_spark.operators import textops
+    Dataset stays registered with the cache manager.  The iterative
+    spatial/raster closures (DBSCAN, the D8 pointer-doubling pair, both
+    seam-merge arms of vectorize_regions_global) keep the same lifecycle."""
+    import numpy as np
+    from data_cube_utilities_spark.operators import rasterops, textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(60)
     imgs = docs.select(F.col("doc_id").alias("img_id"),
                        F.xxhash64("text").alias("phash"))
+    grid = spark.createDataFrame(
+        [(ix, iy, (ix * 7 + iy * 3) % 11) for ix in range(8)
+         for iy in range(8)], "ix long, iy long, v long")
+    pts = spark.createDataFrame(
+        [(i, i % 9, i // 9) for i in range(40)] + [(99, 50, 50)],
+        "pid long, x long, y long")
+    yy, xx = np.ogrid[:16, :16]
+    mask = ((yy - 8) ** 2 + (xx - 8) ** 2 <= 25).astype(float)
+    planes = rasterops.plane_df(spark, {
+        (tx, ty): mask[ty * 8:(ty + 1) * 8, tx * 8:(tx + 1) * 8]
+        for tx in range(2) for ty in range(2)})
+
+    def vectorize_distributed():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(rasterops, "_SEAM_DRIVER_MAX_PAIRS", -1)
+            return rasterops.vectorize_regions_global(planes, tile_w=8,
+                                                      tile_h=8)
     cache = spark._jsparkSession.sharedState().cacheManager()
     # start from an empty cache so a leak from another test cannot fail
     # (or mask) this one
@@ -242,6 +262,12 @@ def test_group_b_operators_release_their_caches(spark):
         lambda: textops.pack_chunks(docs, window=64, n_shards=8),
         lambda: textops.char_bigram_familiarity(docs),
         lambda: textops.containment_dedup_pairs(docs, 900000),
+        lambda: spatial.dbscan_points(pts, eps=1, min_pts=3),
+        lambda: spatial.watershed_basins_grid(grid),
+        lambda: spatial.flow_path_length_grid(grid),
+        lambda: rasterops.vectorize_regions_global(planes, tile_w=8,
+                                                   tile_h=8),
+        vectorize_distributed,
     ]
     for call in calls:
         before = _cached_ids(spark)

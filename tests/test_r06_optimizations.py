@@ -67,9 +67,10 @@ def test_cosine_factored_norms_match_kernel_bitwise(spark):
             assert r["k"] == r["c"], r
 
 
-def test_embedding_near_dup_chain_branch_matches_kernel_branch(spark):
-    # force the chain branch (n_rows override) on a small corpus and
-    # compare the full operator output against the kernel branch
+def test_embedding_near_dup_chain_branch_matches_kernel_branch(spark,
+                                                               monkeypatch):
+    # force each branch through CHAIN_MIN_ROWS on a small corpus and
+    # compare the full operator output of the chain and kernel branches
     dims = 8
     rows = []
     for i in range(80):
@@ -78,10 +79,12 @@ def test_embedding_near_dup_chain_branch_matches_kernel_branch(spark):
         if i % 4 == 0:   # plant near-dups so pairs survive the threshold
             rows.append((1000 + i, (base + 0.01 * RNG.randn(dims)).tolist()))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(textops, "CHAIN_MIN_ROWS", 10 ** 9)     # kernel arm
     kern = textops.embedding_near_dup_pairs(
-        df, threshold=0.3, dims=dims, planes=4, n_rows=1)        # kernel arm
+        df, threshold=0.3, dims=dims, planes=4)
+    monkeypatch.setattr(textops, "CHAIN_MIN_ROWS", 0)           # chain arm
     chain = textops.embedding_near_dup_pairs(
-        df, threshold=0.3, dims=dims, planes=4, n_rows=10 ** 9)  # chain arm
+        df, threshold=0.3, dims=dims, planes=4)
     a = sorted(map(tuple, kern.collect()))
     b = sorted(map(tuple, chain.collect()))
     assert a == b and len(a) > 0

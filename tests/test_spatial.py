@@ -614,14 +614,13 @@ def test_hotspot_run_stats_streaks(spark):
 
 
 def test_flow_path_length_matches_walker(spark):
+    """flow_path_length_grid and watershed_basins_grid share one
+    pointer-doubling loop: both must match a cell-by-cell D8 walker — the
+    hop count and the terminal cell of every path — on a diagonal ramp
+    and on a deep chain."""
     from data_cube_utilities_spark.operators import spatial
 
-    rows = [(ix, iy, ix + iy) for ix in range(6) for iy in range(6)]
-    g = spark.createDataFrame(rows, "ix long, iy long, v long")
-    out = spatial.flow_path_length_grid(g).toPandas()
-    vv = {(ix, iy): v for ix, iy, v in rows}
-
-    def nxt(c):
+    def nxt(vv, c):
         best = None
         for dx, dy, code, w in spatial.D8_OFFSETS:
             p = (c[0] + dx, c[1] + dy)
@@ -632,14 +631,36 @@ def test_flow_path_length_matches_walker(spark):
                     best = (r, code, p)
         return best[2] if best else None
 
-    for _, r in out.iterrows():
-        c, steps = (r.ix, r.iy), 0
-        while (n := nxt(c)) is not None:
-            c, steps = n, steps + 1
-        assert r.path_len == steps
+    def check(rows):
+        g = spark.createDataFrame(rows, "ix long, iy long, v long")
+        vv = {(ix, iy): v for ix, iy, v in rows}
+        out = spatial.flow_path_length_grid(g).toPandas()
+        basins = (spatial.watershed_basins_grid(g).toPandas()
+                  .set_index(["ix", "iy"]))
+        assert len(out) == len(basins) == len(rows)
+        for _, r in out.iterrows():
+            c, steps = (r.ix, r.iy), 0
+            while (n := nxt(vv, c)) is not None:
+                c, steps = n, steps + 1
+            assert r.path_len == steps
+            b = basins.loc[(r.ix, r.iy)]
+            assert (b.basin_ix, b.basin_iy) == c
+        return g, out
+
+    _, out = check([(ix, iy, ix + iy) for ix in range(6) for iy in range(6)])
     # diagonal ramp: the far corner is exactly 5 diagonal hops from the pit
     assert out[(out.ix == 5) & (out.iy == 5)].path_len.iloc[0] == 5
     assert out[(out.ix == 0) & (out.iy == 0)].path_len.iloc[0] == 0
+
+    # strictly decreasing 1x40 line: the far end is 39 hops from the pit
+    # at ix=0, so the loop composes 6 times and leaves through its
+    # all-pits check; cut to 5 rounds it reaches 2^5 = 32 hops and stops
+    g, out = check([(ix, 0, ix) for ix in range(40)])
+    assert out[out.ix == 39].path_len.iloc[0] == 39
+    short = spatial.flow_path_length_grid(g, max_iters=5).toPandas()
+    assert short[short.ix == 39].path_len.iloc[0] == 32
+    wshort = spatial.watershed_basins_grid(g, max_iters=5).toPandas()
+    assert wshort[wshort.ix == 39].basin_ix.iloc[0] == 7
 
 
 def test_stream_order_shreve_matches_walker(spark):

@@ -60,7 +60,7 @@ def main():
     # 1. index build: per-subspace k-means on a bounded sample
     t0 = time.time()
     cb = textops.pq_codebook_train(emb, dims=DIMS, m=M, ksub=KSUB,
-                                   sample=50_000, seed=1, n_rows=N_ROWS)
+                                   sample=50_000, seed=1)
     train_sec = time.time() - t0
 
     # 2. encode the full table and persist the codes — the thing that
